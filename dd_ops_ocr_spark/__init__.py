@@ -21,3 +21,9 @@ from dd_ops_ocr_spark.schema import (  # noqa: F401
     SPANS_SCHEMA,
     OUT_SPANS_SCHEMA,
 )
+
+# Every worker that unpickles a package kernel imports the package, so
+# installing here covers every Python task after a worker's first.
+from dd_ops_ocr_spark import worker_zipcache as _worker_zipcache  # noqa: E402
+
+_worker_zipcache.install()

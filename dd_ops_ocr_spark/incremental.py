@@ -124,7 +124,7 @@ def probe_result_dirs(spark: SparkSession, candidate_dirs) -> DataFrame:
     frames = []
     for pri, d in enumerate(candidate_dirs):
         for root in (f"{d}/data", d):
-            if not ledger._parquet_nonempty(root):
+            if not ledger._parquet_nonempty(root, spark):
                 continue
             # Eagerly validate the candidate (foreign trees may lack a
             # doc_id column, or carry truncated footers): a metadata-only

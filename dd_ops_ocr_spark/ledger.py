@@ -253,7 +253,7 @@ def run_one_pass(
     # never on the written data alone — otherwise empty buckets would
     # stay uncommitted forever and every resume would reprocess them.
     todo_df = spark.createDataFrame([(b,) for b in todo], "bucket int")
-    if _parquet_nonempty(f"{out_dir}/data"):
+    if _parquet_nonempty(f"{out_dir}/data", spark):
         written_agg = (
             spark.read.parquet(f"{out_dir}/data")
             .filter(F.col("bucket").isin(*todo))

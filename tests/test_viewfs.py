@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import threading
 
 import pytest
 
-from dd_ops_ocr_spark import corpus, ledger
+from dd_ops_ocr_spark import corpus, incremental, ledger
 from tests.conftest import SF_SMOKE
 
 N_BUCKETS = 4
@@ -45,6 +46,33 @@ def test_parquet_probe_takes_hadoop_branch(spark, viewfs_root):
     assert ledger._parquet_nonempty(missing) is False
     spark.range(3).write.mode("overwrite").parquet(f"{viewfs_root}/probe_t")
     assert ledger._parquet_nonempty(f"{viewfs_root}/probe_t") is True
+
+
+def test_probe_result_dirs_from_new_thread(spark, viewfs_root):
+    """The Hadoop-FS probe must use the session it is handed: a fresh
+    thread has no active session even while the main thread holds one,
+    so a probe that falls back to getActiveSession() raises there."""
+    cand = f"{viewfs_root}/probe_thread"
+    spark.createDataFrame([("d1",), ("d2",)], "doc_id string") \
+        .write.mode("overwrite").parquet(cand)
+    out: dict = {}
+
+    def probe():
+        try:
+            out["rows"] = sorted(
+                tuple(r) for r in
+                incremental.probe_result_dirs(spark, [cand]).collect()
+            )
+        except Exception as exc:  # re-raised on the main thread below
+            out["error"] = exc
+
+    t = threading.Thread(target=probe)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "probe thread did not finish"
+    if "error" in out:
+        raise out["error"]
+    assert out["rows"] == [("d1", cand), ("d2", cand)]
 
 
 def test_crash_and_resume_exact_on_viewfs(spark, viewfs_root):
