@@ -120,3 +120,21 @@ def extract_doc(spans: list[dict], include_page: bool = False) -> list[dict]:
             row["page"] = s["page"]
         out.append(row)
     return out
+
+
+def expected_rows(documents):
+    """Oracle output for a documents table (pandas, columns doc_id and
+    text) as flat rows: a pandas DataFrame of (doc_id, kind, text,
+    media_ref, order), each doc's spans generated by ``corpus.doc_spans``."""
+    import pandas as pd
+
+    from dd_ops_ocr_spark import corpus
+
+    rows: list[tuple] = []
+    for doc_key, text in zip(documents["doc_id"], documents["text"]):
+        did = corpus.doc_id_str(int(doc_key))
+        for s in extract_doc(corpus.doc_spans(int(doc_key), text or "")):
+            rows.append((did, s["kind"], s["text"], s["media_ref"], s["order"]))
+    return pd.DataFrame(
+        rows, columns=["doc_id", "kind", "text", "media_ref", "order"]
+    )

@@ -13,21 +13,27 @@ broadcasts, exactly ONE extra scan and ONE small shuffle over the tail):
     ``array_max(spans.offset)`` — no higher-order lambda in the hot scan.
   * **big docs** (the rare tail) run ONE doc-global Arrow pass
     (``_bucketize_kernel``, shuffle-free: a row is a whole doc) that
-    normalizes (RE2), drops empties, strips boilerplate, and emits one
-    nested row per salt bucket ``(doc_id, base, spans)`` where
-    ``base`` is the exclusive prefix sum of earlier buckets' survivor
-    counts and ``spans`` carry pre-normalized text. The bucket rows —
-    each bounded by pages_per_bucket pages regardless of document size —
-    are spread round-robin across the cluster (`repartition(n)`, the
-    salt shuffle; nested rows, so the shuffle moves compact array
-    payloads), and a second small kernel (``_rank_kernel``) does the
-    page-local two-up + reading-order rank, offset by ``base``.
+    normalizes (RE2), drops empties and strips boilerplate with the
+    nested kernel's own ``pipeline._strip``, and emits one nested row
+    per salt bucket ``(doc_id, base, spans)`` where ``base`` is the
+    exclusive prefix sum of earlier buckets' survivor counts and
+    ``spans`` carry pre-normalized text. The bucket rows — each bounded
+    by pages_per_bucket pages regardless of document size — are spread
+    round-robin over ``spark.sql.shuffle.partitions`` partitions
+    (`repartition(n)`, the salt shuffle; nested rows, so the shuffle
+    moves compact array payloads), and a second small kernel
+    (``_rank_kernel``) runs ``pipeline._rank`` — the page-local two-up
+    + reading-order rank — per bucket, offset by ``base``.
 
   All doc-global state (boilerplate keys, order bases) is resolved
   inside the bucketize kernel while the doc is still whole — nothing is
   collected, broadcast, or window-aggregated, so there is no relation
-  whose size grows with the tail. Task cost after the shuffle is bounded
-  by pages_per_bucket pages — the salt's whole job.
+  whose size grows with the tail. A post-shuffle task carries
+  ceil(buckets / shuffle partitions) buckets, so its cost is bounded by
+  pages_per_bucket pages only while the tail has no more salt buckets
+  than there are shuffle partitions; past that, each task's share grows
+  with the tail (25 buckets over 8 partitions put 3-4 buckets on each
+  salt task).
 
 Semantics are identical to ``pipeline.extract`` — asserted span-for-span
 against the same oracle in tests/test_salted.py and against the DuckDB
@@ -41,22 +47,13 @@ analyses in "CPU and GPU Hash Joins on Skewed Data", ICDE 2024, PAPERS.md.)
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
-from dd_ops_ocr_spark.schema import (
-    BOILERPLATE_FRAC,
-    CX,
-    FOOTER_ZONE,
-    GUTTER_HALF,
-    HEADER_ZONE,
-    MIN_PAGES_BOILERPLATE,
-    OUT_SPANS_DDL,
-    PAGE_H,
-    PAGE_W,
-    STRIDE,
-    TWOUP_MIN_SIDE,
-)
+from dd_ops_ocr_spark.pipeline import OUT_SCHEMA, _flatten, _rank, _strip, extract
+from dd_ops_ocr_spark.schema import OUT_SPANS_DDL, STRIDE
 
 PAGES_PER_BUCKET = 25
 
@@ -64,129 +61,37 @@ BUCKET_DDL = (
     "doc_id string, base bigint, spans array<struct<"
     "kind:string,text:string,media_ref:string,offset:int>>"
 )
-
-
-def _normalize_arrow(text_arr):
-    """C14 in Arrow C++ (RE2): collapse newline runs, trim whitespace."""
-    import pyarrow.compute as pc
-
-    return pc.utf8_trim_whitespace(
-        pc.replace_substring_regex(text_arr, pattern="\n{2,}", replacement="\n")
-    )
+_SPAN_T = pa.struct(
+    [
+        ("kind", pa.string()),
+        ("text", pa.string()),
+        ("media_ref", pa.string()),
+        ("offset", pa.int32()),
+    ]
+)
+_BUCKET_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("base", pa.int64()), ("spans", pa.list_(_SPAN_T))]
+)
 
 
 def _bucketize_kernel(ppb: int):
     """Doc-global pass over whole tail docs (nested in, nested out):
-    normalize + empty-drop + boilerplate strip, then split the survivors
-    into salt buckets of <= ppb pages and emit one row per bucket with
-    the doc-global order base attached. ``ppb`` is baked into the closure
-    (module globals reset on worker re-import)."""
+    ``pipeline._strip``, then split the survivors into salt buckets of
+    <= ppb pages and emit one row per bucket with the doc-global order
+    base attached. ``ppb`` is baked into the closure (module globals
+    reset on worker re-import)."""
 
     def run(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        span_t = pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-        out_schema = pa.schema(
-            [
-                ("doc_id", pa.string()),
-                ("base", pa.int64()),
-                ("spans", pa.list_(span_t)),
-            ]
-        )
         for batch in batches:
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            spans = tbl.column("spans").chunk(0)
-            counts = pc.list_value_length(spans).fill_null(0).to_numpy()
-            struct = pc.list_flatten(spans)
-            if len(struct) == 0:
-                continue
-            doc_ids = tbl.column("doc_id").chunk(0)
-            doc_idx = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-
-            is_text = (
-                pc.equal(struct.field("kind"), "text")
-                .fill_null(False)
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            norm = _normalize_arrow(struct.field("text"))
-            norm_len = pc.binary_length(norm).fill_null(0).to_numpy()
-            offset = (
-                struct.field("offset").to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            keep = (~is_text) | (norm_len > 0)
-
-            ki = np.flatnonzero(keep)
-            d = doc_idx[ki]
-            off = offset[ki]
-            page = off // STRIDE
-            y = (off % STRIDE) // PAGE_W
-            zone = np.where(
-                y < HEADER_ZONE, 1, np.where(y >= PAGE_H - FOOTER_ZONE, 2, 0)
-            )
-            zone = np.where(is_text[ki], zone, 0)
-
-            # boilerplate strip — factorized keys + run counting, the
-            # same no-Python-strings form as pipeline._run_arrow (the
-            # old pandas groupby materialized every candidate text via
-            # to_pylist, re-introducing per-row Python objects in the
-            # tail-doc hot kernel); spec unchanged vs
-            # oracle.extract_doc step 4.
-            boiler = np.zeros(len(ki), dtype=bool)
-            cand = np.flatnonzero(zone > 0)
-            if len(cand):
-                # distinct (doc, page) pairs -> n_pages per doc
-                dpk = (d << 10) | page  # page <= 409 < 2^10
-                seen = np.zeros(
-                    np.int64(len(counts)) << 10, dtype=bool
-                )
-                seen[dpk] = True
-                dp_dom = np.flatnonzero(seen)
-                n_pages = np.bincount(dp_dom >> 10, minlength=len(counts))
-                span_n_pages = n_pages[d]
-
-                # distinct pages per (doc, zone, text-code)
-                norm_cand = pc.take(norm, pa.array(ki[cand]))
-                codes = pc.dictionary_encode(norm_cand)
-                code_np = np.asarray(
-                    pc.fill_null(codes.indices, -1)
-                    .to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                ukey = (
-                    (d[cand] << 34)
-                    | (np.int64(1) * zone[cand] << 32)
-                    | code_np
-                )
-                pg = page[cand]
-                srt2 = np.lexsort((pg, ukey))
-                uk_s, pg_s = ukey[srt2], pg[srt2]
-                first = np.ones(len(srt2), dtype=bool)
-                first[1:] = (uk_s[1:] != uk_s[:-1]) | (pg_s[1:] != pg_s[:-1])
-                uniq_keys, zpages = np.unique(uk_s[first], return_counts=True)
-                zp_span = zpages[np.searchsorted(uniq_keys, ukey)]
-                thr = np.ceil(BOILERPLATE_FRAC * span_n_pages[cand])
-                boiler[cand] = (
-                    (span_n_pages[cand] >= MIN_PAGES_BOILERPLATE)
-                    & (zp_span >= thr)
-                )
-
-            ki2 = np.flatnonzero(~boiler)
-            if len(ki2) == 0:
+            tbl, struct, doc_idx, n_docs = _flatten(batch)
+            gi, norm, is_text = _strip(struct, doc_idx, n_docs)
+            if len(gi) == 0:
                 # every span of this batch normalized to nothing / was
                 # boilerplate — nothing to emit (hypothesis-discovered)
                 continue
-            gi = ki[ki2]
-            d = d[ki2]
-            salt = page[ki2] // ppb
+            offset = struct.field("offset").to_numpy(zero_copy_only=False)
+            d = doc_idx[gi]
+            salt = offset[gi].astype(np.int64) // STRIDE // ppb
 
             # group survivors by (doc, salt); bases = exclusive prefix sum
             ds = d * 4096 + salt  # salt <= 409 < 4096
@@ -204,100 +109,50 @@ def _bucketize_kernel(ppb: int):
             ))
             gbase = cum - doc_base0  # per-doc exclusive prefix sum
 
-            take_idx = pa.array(gi[srt])
-            text_sorted = pc.take(norm, take_idx)
-            is_text_sorted = pa.array(is_text[gi[srt]])
+            gi = gi[srt]
+            take_idx = pa.array(gi)
             values = pa.StructArray.from_arrays(
                 [
                     pc.take(struct.field("kind"), take_idx),
                     pc.if_else(
-                        is_text_sorted, text_sorted, pa.scalar(None, pa.string())
+                        pa.array(is_text[gi]),
+                        pc.take(norm, take_idx),
+                        pa.scalar(None, pa.string()),
                     ),
                     pc.take(struct.field("media_ref"), take_idx),
                     pc.take(struct.field("offset"), take_idx),
                 ],
-                fields=list(span_t),
+                fields=list(_SPAN_T),
             )
             list_offsets = pa.array(
                 np.concatenate(([0], np.cumsum(glens))).astype(np.int32)
             )
             yield pa.RecordBatch.from_arrays(
                 [
-                    pc.take(doc_ids, pa.array(gdoc)),
+                    pc.take(tbl.column("doc_id").chunk(0), pa.array(gdoc)),
                     pa.array(gbase.astype(np.int64)),
                     pa.ListArray.from_arrays(list_offsets, values),
                 ],
-                schema=out_schema,
+                schema=_BUCKET_SCHEMA,
             )
 
     return run
 
 
 def _rank_kernel(batches):
-    """Per-bucket two-up + reading-order rank. Input rows are whole salt
-    buckets of pre-normalized, pre-stripped spans with the doc-global
-    order base; batches always contain whole rows, so this is shuffle-
-    and state-free."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("order", pa.int32()),
-        ]
-    )
+    """Per-bucket ``pipeline._rank``, offset by the doc-global order
+    base. Input rows are whole salt buckets of pre-normalized,
+    pre-stripped spans, and a page never straddles buckets, so two-up
+    per (bucket row, page) equals two-up per (doc, page); batches always
+    contain whole rows, so this is shuffle- and state-free."""
     for batch in batches:
-        tbl = pa.Table.from_batches([batch]).combine_chunks()
-        spans = tbl.column("spans").chunk(0)
-        counts = pc.list_value_length(spans).fill_null(0).to_numpy()
-        struct = pc.list_flatten(spans)
+        tbl, struct, row_idx, _ = _flatten(batch)
         if len(struct) == 0:
             continue
-        row_idx = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
         base = tbl.column("base").chunk(0).to_numpy(zero_copy_only=False)
-
-        offset = struct.field("offset").to_numpy(zero_copy_only=False).astype(np.int64)
-        page = offset // STRIDE
-        rem = offset % STRIDE
-        y = rem // PAGE_W
-        x = rem % PAGE_W
-
-        # two-up per (bucket row, page): pages never straddle buckets.
-        PAGE_CAP = 1024
-        rp = row_idx * PAGE_CAP + page
-        rp_codes, rp_inv = np.unique(rp, return_inverse=True)
-        m = len(rp_codes)
-        left = np.bincount(rp_inv[x < CX - GUTTER_HALF], minlength=m)
-        right = np.bincount(rp_inv[x >= CX + GUTTER_HALF], minlength=m)
-        gutter = np.bincount(
-            rp_inv[(x >= CX - GUTTER_HALF) & (x < CX + GUTTER_HALF)], minlength=m
-        )
-        two_up = (gutter == 0) & (left >= TWOUP_MIN_SIDE) & (right >= TWOUP_MIN_SIDE)
-        side = (two_up[rp_inv] & (x >= CX)).astype(np.int64)
-
-        # composite sort key: row 20b | page 10b | side 1b | y 12b | x 11b.
-        # Bound guard: a batch-size or geometry change must fail loudly,
-        # never silently mis-rank via bit overflow. Explicit raises, not
-        # assert — PYTHONOPTIMIZE/-O workers compile asserts out.
-        if row_idx.max() >= (1 << 20):
-            raise ValueError("batch exceeds 2^20 bucket rows")
-        if page.max() >= (1 << 10):
-            raise ValueError("page index exceeds 2^10")
-        if y.max() >= (1 << 12) or x.max() >= (1 << 11):
-            raise ValueError("span coordinates exceed packed key geometry")
-        key = (((row_idx << 10 | page) << 1 | side) << 12 | y) << 11 | x
-        srt = np.argsort(key, kind="stable")
+        offset = struct.field("offset").to_numpy(zero_copy_only=False)
+        srt, order, _ = _rank(row_idx, offset)
         r_s = row_idx[srt]
-        starts = np.ones(len(srt), dtype=bool)
-        starts[1:] = r_s[1:] != r_s[:-1]
-        group_start = np.maximum.accumulate(np.where(starts, np.arange(len(srt)), 0))
-        local = np.arange(len(srt)) - group_start + 1
-        order = (local + base[r_s]).astype(np.int32)
-
         take_idx = pa.array(srt)
         yield pa.RecordBatch.from_arrays(
             [
@@ -305,9 +160,9 @@ def _rank_kernel(batches):
                 pc.take(struct.field("kind"), take_idx),
                 pc.take(struct.field("text"), take_idx),
                 pc.take(struct.field("media_ref"), take_idx),
-                pa.array(order),
+                pa.array((order + base[r_s]).astype(np.int32)),
             ],
-            schema=out_schema,
+            schema=OUT_SCHEMA,
         )
 
 
@@ -318,9 +173,7 @@ def _salted_from_parts(
     over ``big``. The two subtrees are independent — Spark schedules
     their stages concurrently within the one union action, so the small
     extract overlaps the bucketize stage."""
-    from dd_ops_ocr_spark import pipeline
-
-    small_out = pipeline.extract(small)
+    small_out = extract(small)
     # Tail: one doc-global kernel -> bucket rows -> salt shuffle -> rank.
     buckets = big.mapInArrow(_bucketize_kernel(ppb), schema=BUCKET_DDL)
     n_part = int(big.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -338,8 +191,13 @@ def extract_salted(
     codegen'd ``array_max(spans.offset)`` — no per-element lambda in the
     hot scan). When the input LANDED with the ``size_class`` partition
     column (corpus.materialize_spans), use ``extract_salted_pruned``
-    instead: the same plan, but each scan file-prunes to its class."""
+    instead: the same plan, but each scan file-prunes to its class.
+
+    Raises ``ValueError`` for ``pages_per_bucket < 1`` before building
+    any plan."""
     ppb = pages_per_bucket
+    if ppb < 1:
+        raise ValueError(f"pages_per_bucket must be >= 1, got {ppb}")
     routed = df.withColumn(
         "_maxpage",
         F.coalesce(

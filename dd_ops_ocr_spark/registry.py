@@ -49,27 +49,6 @@ def _flagship_extract_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_salted(corpus.build_spans_df_cached(spark, sf_dir))
 
 
-def _flagship_extract_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dd_ops_ocr_spark import corpus, pipeline
-
-    return pipeline.extract(
-        corpus.build_spans_df_cached(spark, sf_dir), use_arrow=False
-    )
-
-
-def _flagship_extract_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from dd_ops_ocr_spark import corpus, pipeline
-
-    flat = (
-        corpus.build_spans_df_cached(spark, sf_dir)
-        .select("doc_id", F.explode("spans").alias("s"))
-        .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-    )
-    return pipeline.extract_exploded(flat)
-
-
 def _landed_cache(
     spark: SparkSession, sf_dir: str, suffix: str, **land_kwargs
 ) -> str:
@@ -123,8 +102,8 @@ QUERIES["flagship_extract_salted"] = _flagship_extract_salted
 QUERIES["flagship_extract_salted_pruned"] = _flagship_extract_salted_pruned
 QUERIES["flagship_extract_split_landed"] = _flagship_extract_split_landed
 # every execution path of the same spec is driver-checked against the
-# same DuckDB oracle: Arrow kernel, pure-JVM SQL, salted, pandas kernel,
-# pre-exploded grouped-map
+# same DuckDB oracle: Arrow kernel, pure-JVM SQL, salted, split-landed,
+# pre-exploded bounded
 def _flagship_extract_exploded_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -139,8 +118,11 @@ def _flagship_extract_exploded_bounded(spark: SparkSession, sf_dir: str) -> Data
     return extract_exploded_bounded(flat)
 
 
-QUERIES["flagship_extract_pandas"] = _flagship_extract_pandas
-QUERIES["flagship_extract_exploded"] = _flagship_extract_exploded
+# retired implementations keep their names, bound to the surviving plan
+# for their input layout: nested rows -> the Arrow kernel, pre-exploded
+# rows -> the bounded plan
+QUERIES["flagship_extract_pandas"] = _flagship_extract
+QUERIES["flagship_extract_exploded"] = _flagship_extract_exploded_bounded
 QUERIES["flagship_extract_exploded_bounded"] = _flagship_extract_exploded_bounded
 QUERIES["flagship_metrics"] = _flagship_metrics
 

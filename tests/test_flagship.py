@@ -70,13 +70,21 @@ def test_corpus_has_required_shapes():
     assert tail_seen, "sf0.001 should contain at least one 100-page tail doc"
 
 
-def test_kernel_matches_oracle_pandas():
-    """Kernel vs oracle without Spark (fast unit-level check)."""
+def test_kernel_matches_oracle_no_spark():
+    """Arrow kernel vs oracle without Spark (fast unit-level check)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from dd_ops_ocr_spark.schema import SPANS_SCHEMA
+
     docs = _read_documents(SF_SMOKE).head(60)
-    spans_pdf = corpus.spans_pandas(docs)
-    got = pipeline.extract_flat_pandas(pipeline.flatten_nested_batch(spans_pdf))
-    want = pipeline.expected_output_pandas(docs)
-    g, w = _tuples(got), _tuples(want)
+    batch = pa.RecordBatch.from_pandas(
+        corpus.spans_pandas(docs),
+        schema=to_arrow_schema(SPANS_SCHEMA),
+        preserve_index=False,
+    )
+    got = pa.Table.from_batches(list(pipeline._run_arrow([batch]))).to_pandas()
+    g, w = _tuples(got), _tuples(oracle.expected_rows(docs))
     assert set(g) == set(w)
     for did in w:
         assert g[did] == w[did], f"mismatch for {did}"
@@ -89,21 +97,19 @@ def test_spark_pipeline_matches_oracle_sf001(spark):
     docs = _read_documents(sf)
     out = pipeline.extract(corpus.build_spans_df(spark, sf))
     got = _tuples(out.toPandas())
-    want = _tuples(pipeline.expected_output_pandas(docs))
+    want = _tuples(oracle.expected_rows(docs))
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch"
 
 
-@pytest.mark.parametrize("path", ["arrow", "nested", "exploded", "sql"])
+@pytest.mark.parametrize("path", ["arrow", "exploded", "sql"])
 def test_spark_pipeline_matches_oracle(spark, path):
     """End-to-end span-sequence equality at sf0.001 (500 docs)."""
     docs = _read_documents(SF_SMOKE)
     spans_df = corpus.build_spans_df(spark, SF_SMOKE)
     if path == "arrow":
-        out = pipeline.extract(spans_df, use_arrow=True)
-    elif path == "nested":
-        out = pipeline.extract(spans_df, use_arrow=False)
+        out = pipeline.extract(spans_df)
     elif path == "sql":
         from dd_ops_ocr_spark.plans.sql_extract import extract_sql
 
@@ -111,12 +117,14 @@ def test_spark_pipeline_matches_oracle(spark, path):
     else:
         from pyspark.sql import functions as F
 
+        from dd_ops_ocr_spark.plans.bounded import extract_exploded_bounded
+
         flat = spans_df.select(
             "doc_id", F.explode("spans").alias("s")
         ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-        out = pipeline.extract_exploded(flat)
+        out = extract_exploded_bounded(flat)
     got = _tuples(out.toPandas())
-    want = _tuples(pipeline.expected_output_pandas(docs))
+    want = _tuples(oracle.expected_rows(docs))
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"

@@ -8,11 +8,13 @@ end-to-end tests; this hammers the semantics where the bugs live.
 
 from __future__ import annotations
 
-import pandas as pd
 from hypothesis import example, given, settings, strategies as st
 
 from dd_ops_ocr_spark import oracle, pipeline
-from dd_ops_ocr_spark.schema import CX, GUTTER_HALF, HEADER_ZONE, PAGE_H, PAGE_W, STRIDE
+from dd_ops_ocr_spark.schema import (
+    CX, FOOTER_ZONE, GUTTER_HALF, HEADER_ZONE, PAGE_H, PAGE_W, SPANS_SCHEMA,
+    STRIDE, TWOUP_MIN_SIDE,
+)
 
 # adversarial coordinates: cluster around every decision boundary
 _ys = st.one_of(
@@ -75,48 +77,85 @@ def _doc(draw):
     return out
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.lists(_doc(), min_size=1, max_size=4))
-def test_kernel_equals_oracle_on_random_geometry(docs):
-    flat_rows = []
-    want = {}
-    for i, spans in enumerate(docs):
-        did = f"d{i}"
-        want[did] = [
+def _header_doc(n_pages: int, header_pages: int, y: int = 10) -> list[dict]:
+    """A body span on each of ``n_pages`` pages plus the same text at row
+    ``y`` on the first ``header_pages`` of them: with ``header_pages`` at
+    the boilerplate threshold, ceil(BOILERPLATE_FRAC * n_pages), the
+    text is stripped exactly at the boundary."""
+    spans = []
+    for p in range(n_pages):
+        spans.append({"kind": "text", "text": "body", "media_ref": None,
+                      "offset": p * STRIDE + 500 * PAGE_W + 100})
+        if p < header_pages:
+            spans.append({"kind": "text", "text": "HEADER", "media_ref": None,
+                          "offset": p * STRIDE + y * PAGE_W + 10})
+    return spans
+
+
+def _two_up_doc(gutter_spans: int) -> list[dict]:
+    """One page with TWOUP_MIN_SIDE interleaved spans on each side of the
+    gutter, plus ``gutter_spans`` spans inside it."""
+    xs = [CX - GUTTER_HALF - 1, CX + GUTTER_HALF] * TWOUP_MIN_SIDE
+    xs += [CX] * gutter_spans
+    return [{"kind": "text", "text": f"t{i}", "media_ref": None,
+             "offset": (200 + 10 * i) * PAGE_W + x}
+            for i, x in enumerate(xs)]
+
+
+# decision boundaries that random geometries rarely hit, since each needs
+# one text repeated in a zone across pages or a full two-up page: the
+# boilerplate minimum page count, a key on exactly the threshold number
+# of pages, the last row inside/first row outside each zone, and a
+# two-up page with zero or one gutter span
+_EDGES = [
+    _header_doc(3, 3), _header_doc(5, 4), _header_doc(5, 3),
+    _header_doc(3, 3, HEADER_ZONE - 1), _header_doc(3, 3, HEADER_ZONE),
+    _header_doc(3, 3, PAGE_H - FOOTER_ZONE - 1),
+    _header_doc(3, 3, PAGE_H - FOOTER_ZONE),
+    _two_up_doc(0), _two_up_doc(1),
+]
+
+
+def _nested_batch(docs):
+    """One nested (doc_id, spans) Arrow batch, doc ``i`` named ``d{i}``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_pydict(
+        {"doc_id": [f"d{i}" for i in range(len(docs))], "spans": docs},
+        schema=to_arrow_schema(SPANS_SCHEMA),
+    )
+
+
+def _expected(docs) -> dict[str, list]:
+    return {
+        f"d{i}": [
             (s["kind"], s["text"], s["media_ref"], s["order"])
             for s in oracle.extract_doc(spans)
         ]
-        for s in spans:
-            flat_rows.append(
-                {
-                    "doc_id": did,
-                    "kind": s["kind"],
-                    "text": s["text"],
-                    "media_ref": s["media_ref"],
-                    "offset": s["offset"],
-                }
-            )
-    flat = pd.DataFrame(
-        flat_rows,
-        columns=["doc_id", "kind", "text", "media_ref", "offset"],
-    )
-    out = pipeline.extract_flat_pandas(flat)
-    got: dict[str, list] = {d: [] for d in want}
-    for r in out.itertuples():
-        got[r.doc_id].append(
-            (
-                r.kind,
-                None if pd.isna(r.text) else r.text,
-                None if pd.isna(r.media_ref) else r.media_ref,
-                int(r.order),
-            )
-        )
-    for did in want:
-        assert got.get(did, []) == want[did], f"{did}: {got.get(did)} != {want[did]}"
+        for i, spans in enumerate(docs)
+    }
 
 
-@settings(max_examples=60, deadline=None)
-@given(st.lists(_doc(), min_size=1, max_size=3))
+def _collect(outs) -> dict[str, list]:
+    """Output batches -> per-doc (kind, text, media_ref, order) tuples,
+    sorted by order."""
+    got: dict[str, list] = {}
+    for out in outs:
+        cols = out.to_pydict()
+        for did, kind, text, ref, order in zip(
+            cols["doc_id"], cols["kind"], cols["text"], cols["media_ref"],
+            cols["order"],
+        ):
+            got.setdefault(did, []).append((kind, text, ref, order))
+    for spans in got.values():
+        spans.sort(key=lambda t: t[3])
+    return got
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_doc(), min_size=1, max_size=4))
+@example(docs=_EDGES)
 @example(
     # regression for a hypothesis-discovered failure at offset 2_149_316_608
     # (> int32 — outside the schema's input domain, so pinned here at the
@@ -128,91 +167,16 @@ def test_kernel_equals_oracle_on_random_geometry(docs):
             "offset": 2_147_483_647}]],
 )
 def test_arrow_kernel_equals_oracle(docs):
-    """Same property against the Arrow-native kernel (_run_arrow), which is
-    an independent implementation of the same spec."""
-    import pyarrow as pa
-
-    want = {}
-    ids, spans_col = [], []
-    for i, spans in enumerate(docs):
-        did = f"d{i}"
-        want[did] = [
-            (s["kind"], s["text"], s["media_ref"], s["order"])
-            for s in oracle.extract_doc(spans)
-        ]
-        ids.append(did)
-        spans_col.append(spans)
-    batch = pa.RecordBatch.from_pydict(
-        {
-            "doc_id": ids,
-            "spans": spans_col,
-        },
-        schema=pa.schema(
-            [
-                ("doc_id", pa.string()),
-                (
-                    "spans",
-                    pa.list_(
-                        pa.struct(
-                            [
-                                ("kind", pa.string()),
-                                ("text", pa.string()),
-                                ("media_ref", pa.string()),
-                                ("offset", pa.int32()),
-                            ]
-                        )
-                    ),
-                ),
-            ]
-        ),
-    )
-    got: dict[str, list] = {d: [] for d in want}
-    for out in pipeline._run_arrow([batch]):
-        pdf = out.to_pandas()
-        for r in pdf.itertuples():
-            got[r.doc_id].append(
-                (
-                    r.kind,
-                    None if pd.isna(r.text) else r.text,
-                    None if pd.isna(r.media_ref) else r.media_ref,
-                    int(r.order),
-                )
-            )
-    for did in want:
-        assert got.get(did, []) == want[did], f"{did}"
-
-
-_SPAN_T = None
-
-
-def _nested_batch(ids, spans_col):
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_pydict(
-        {"doc_id": ids, "spans": spans_col},
-        schema=pa.schema(
-            [
-                ("doc_id", pa.string()),
-                (
-                    "spans",
-                    pa.list_(
-                        pa.struct(
-                            [
-                                ("kind", pa.string()),
-                                ("text", pa.string()),
-                                ("media_ref", pa.string()),
-                                ("offset", pa.int32()),
-                            ]
-                        )
-                    ),
-                ),
-            ]
-        ),
-    )
+    """The nested kernel (pipeline._run_arrow) reproduces the oracle
+    span-for-span."""
+    got = _collect(pipeline._run_arrow([_nested_batch(docs)]))
+    for did, want in _expected(docs).items():
+        assert got.get(did, []) == want, f"{did}"
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.lists(_doc(), min_size=1, max_size=3))
+@example(docs=_EDGES)
 @example(
     # hypothesis-discovered: a batch whose every span is dropped must
     # emit nothing (not crash on the empty group array)
@@ -225,32 +189,7 @@ def test_salted_kernels_equal_oracle(docs):
     (ppb=2 forces nearly every multi-page doc through multiple buckets)."""
     from dd_ops_ocr_spark.plans.salting import _bucketize_kernel, _rank_kernel
 
-    ppb = 2
-    want = {}
-    ids, spans_col = [], []
-    for i, spans in enumerate(docs):
-        did = f"d{i}"
-        want[did] = [
-            (s["kind"], s["text"], s["media_ref"], s["order"])
-            for s in oracle.extract_doc(spans)
-        ]
-        ids.append(did)
-        spans_col.append(spans)
-    batch = _nested_batch(ids, spans_col)
-
-    bucket_batches = list(_bucketize_kernel(ppb)([batch]))
-    got: dict[str, list] = {d: [] for d in want}
-    for out in _rank_kernel(bucket_batches):
-        pdf = out.to_pandas()
-        for r in pdf.itertuples():
-            got[r.doc_id].append(
-                (
-                    r.kind,
-                    None if pd.isna(r.text) else r.text,
-                    None if pd.isna(r.media_ref) else r.media_ref,
-                    int(r.order),
-                )
-            )
-    for did in want:
-        got[did].sort(key=lambda t: t[3])
-        assert got.get(did, []) == want[did], f"{did}"
+    bucket_batches = list(_bucketize_kernel(2)([_nested_batch(docs)]))
+    got = _collect(_rank_kernel(bucket_batches))
+    for did, want in _expected(docs).items():
+        assert got.get(did, []) == want, f"{did}"

@@ -6,8 +6,9 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
+import pytest
 
-from dd_ops_ocr_spark import corpus, pipeline
+from dd_ops_ocr_spark import corpus, oracle, pipeline
 from dd_ops_ocr_spark.plans.salting import extract_salted
 from tests.conftest import SF_SMOKE
 
@@ -31,7 +32,7 @@ def test_salted_matches_oracle(spark):
     ).df()
     spans_df = corpus.build_spans_df(spark, SF_SMOKE)
     got = _tuples(extract_salted(spans_df, pages_per_bucket=7).toPandas())
-    want = _tuples(pipeline.expected_output_pandas(docs))
+    want = _tuples(oracle.expected_rows(docs))
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"
@@ -148,3 +149,11 @@ def test_split_landed_matches_plain(spark, tmp_path):
     assert set(got) == set(want)
     mismatches = [d for d in want if got[d] != want[d]]
     assert not mismatches, f"{len(mismatches)} docs mismatch, e.g. {mismatches[:3]}"
+
+
+@pytest.mark.parametrize("ppb", [0, -1])
+def test_salted_rejects_bad_pages_per_bucket(ppb):
+    """A pages_per_bucket below 1 is rejected before any plan is built
+    (no DataFrame needed), not inside a worker mid-job."""
+    with pytest.raises(ValueError, match="pages_per_bucket"):
+        extract_salted(None, pages_per_bucket=ppb)
